@@ -1,132 +1,138 @@
 package graft.checkpoint
 
-import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import scala.io.Codec.UTF8
+import scala.util.Using
+import scala.util.control.NonFatal
 
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
+import org.json4s._
+import org.json4s.jackson.JsonMethods.{compact, parse, render}
 
-/** I6/M8: stage checkpoint store — atomic snapshot commits with a
-  * per-stage manifest carrying lineage + per-partition metrics, so a
-  * killed run resumes mid-pipeline.
+/** I6/M8: stage checkpoint store — one parquet snapshot per pipeline
+  * stage, committed by a manifest that carries its lineage, so a killed
+  * run resumes mid-pipeline.
   *
-  * The north star names Iceberg tables; no Iceberg runtime jar exists on
-  * this image's classpath (SURVEY.md §7.4), so the *semantics* are
-  * implemented over Parquet directories: data is written to a temp dir,
-  * verified, moved into place, and the manifest write is the commit point
-  * (manifest present + fingerprint match = stage committed). This mirrors
-  * Iceberg's snapshot-commit model; if an Iceberg jar appears, only the
-  * format strings change.
+  * Layout: `<root>/<stage>/data` holds the snapshot and
+  * `<root>/<stage>/MANIFEST.json` the commit record (`stage`,
+  * `fingerprint`, `rows`, per-file `partitions`). A stage is committed
+  * when its manifest reads, parses and carries a fingerprint and a row
+  * count; a committed stage whose fingerprint matches is resumed.
+  *
+  * Commit protocol, the rule [[graft.streaming.VersionedState]] follows
+  * too: write in place, write the commit record last, never rename. On a
+  * fingerprint miss the store
+  *  1. deletes MANIFEST.json, so a crash at any later step leaves the
+  *     stage uncommitted (a recursive delete has no guaranteed order);
+  *  2. deletes the stage dir: the old snapshot and any leftovers;
+  *  3. writes the snapshot straight to `data`;
+  *  4. takes per-file row counts from the written parquet footers, read
+  *     on the driver, so no job re-reads the snapshot;
+  *  5. creates MANIFEST.json with one `fs.create`: the commit point.
+  * There is no temp dir renamed into place: on object stores (s3a) a
+  * directory rename is an O(data) copy and not atomic, so it would add
+  * cost and nothing the manifest does not already guarantee. The price
+  * is that a failed recompute leaves the stage with no snapshot rather
+  * than the previous fingerprint's: a later run with the old config
+  * recomputes the stage. For the same reason `compute` must not read
+  * this stage's own snapshot.
+  *
+  * The root may be on any Hadoop FileSystem (`file:`, `hdfs://`,
+  * `s3a://`). On `file:` roots the checksummed LocalFileSystem keeps a
+  * `.MANIFEST.json.crc` sidecar, so a manifest edited outside Hadoop
+  * fails its checksum and counts as uncommitted. The north star names
+  * Iceberg tables; no Iceberg runtime jar exists on this classpath
+  * (SURVEY.md §7.4), so the snapshot-commit semantics sit on plain
+  * parquet directories.
   *
   * This replaces the reference's 6-step compensating merge transaction
   * (merge/MergeEngine.java:97-228, docs/adr/ADR-002): Spark stages are
-  * deterministic and idempotent, so "transaction" = atomic snapshot
-  * overwrite and "rollback" = recompute from the previous stage.
+  * deterministic and idempotent, so "transaction" = snapshot plus commit
+  * record and "rollback" = recompute from the previous stage.
   */
 final class StageStore(root: String, spark: SparkSession) {
 
-  private def stageDir(name: String): Path = Paths.get(root, name)
-  private def dataDir(name: String): Path = stageDir(name).resolve("data")
-  private def manifestPath(name: String): Path = stageDir(name).resolve("MANIFEST.json")
-
-  private def esc(s: String): String =
-    s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    }
+  private val fs = StageStore.fsOf(spark, root)
+  private def stageDir(name: String): Path = new Path(root, name)
+  private def dataDir(name: String): Path = new Path(stageDir(name), "data")
+  private def manifestPath(name: String): Path = new Path(stageDir(name), "MANIFEST.json")
 
   /** Stable fingerprint for (stage params + upstream fingerprints). */
   def fingerprint(parts: String*): String = {
     val md = java.security.MessageDigest.getInstance("SHA-256")
-    md.update(parts.mkString("\u0000").getBytes(StandardCharsets.UTF_8))
+    md.update(parts.mkString("\u0000").getBytes(UTF8.charSet))
     md.digest().map("%02x".format(_)).mkString.take(16)
   }
 
-  def committedFingerprint(name: String): Option[String] = {
-    val mp = manifestPath(name)
-    if (!Files.exists(mp)) None
-    else {
-      val text = new String(Files.readAllBytes(mp), StandardCharsets.UTF_8)
-      """"fingerprint"\s*:\s*"([^"]+)"""".r.findFirstMatchIn(text).map(_.group(1))
-    }
-  }
+  /** (fingerprint, rows) of the stage's commit record, or None when the
+    * stage is uncommitted: no manifest, or one that cannot be read or
+    * parsed (a torn write, a checksum mismatch) or that lacks either
+    * field.
+    */
+  private def manifest(name: String): Option[(String, Long)] =
+    try {
+      val text = Using.resource(fs.open(manifestPath(name)))(in =>
+        new String(in.readAllBytes(), UTF8.charSet))
+      val fields = parse(text) match {
+        case JObject(kvs) => kvs.toMap
+        case _ => Map.empty[String, JValue]
+      }
+      (fields.get("fingerprint"), fields.get("rows")) match {
+        case (Some(JString(fp)), Some(JInt(rows))) => Some((fp, rows.toLong))
+        case _ => None
+      }
+    } catch { case NonFatal(_) => None }
 
-  /** Row count of a committed stage, from its manifest (written at
-    * commit time from the snapshot's own partition stats) — callers that
+  def committedFingerprint(name: String): Option[String] = manifest(name).map(_._1)
+
+  /** Row count of a committed stage, from its manifest — callers that
     * need the cardinality of a just-materialized stage read it here
     * instead of paying a count job over the snapshot.
     */
-  def committedRows(name: String): Option[Long] = {
-    val mp = manifestPath(name)
-    if (!Files.exists(mp)) None
-    else {
-      val text = new String(Files.readAllBytes(mp), StandardCharsets.UTF_8)
-      """"rows"\s*:\s*(\d+)""".r.findFirstMatchIn(text).map(_.group(1).toLong)
-    }
-  }
+  def committedRows(name: String): Option[Long] = manifest(name).map(_._2)
 
   /** Materialize a stage: if a committed snapshot with the same
     * fingerprint exists, read it (resume path, no recompute); otherwise
-    * compute, snapshot atomically, commit the manifest, and read back.
+    * compute, write the snapshot, commit the manifest, and read back.
     * Reading back (instead of reusing the in-memory plan) truncates
     * lineage and makes every downstream stage restart-equivalent.
     */
   def materialize(name: String, fp: String)(compute: => DataFrame): DataFrame = {
+    val data = dataDir(name)
     if (committedFingerprint(name).contains(fp))
-      return spark.read.parquet(dataDir(name).toString)
+      return spark.read.parquet(data.toString)
 
     val df = compute
-    val tmp = stageDir(name).resolve(s".tmp-$fp")
-    Files.createDirectories(stageDir(name))
-    // clean ALL stale tmp snapshots for this stage, not just the current
-    // fingerprint's — a crashed run with a different config would
-    // otherwise leave its near-full copy on disk forever
-    val siblings = Files.list(stageDir(name))
-    try siblings.forEach { p =>
-      if (p.getFileName.toString.startsWith(".tmp-")) deleteRecursively(p)
-    } finally siblings.close()
-    df.write.mode("overwrite").parquet(tmp.toString)
+    fs.delete(manifestPath(name), false)
+    fs.delete(stageDir(name), true)
+    df.write.mode("overwrite").parquet(data.toString)
 
-    // Per-partition lineage metrics from the written files (stable across
-    // reruns because the snapshot, not the plan, is the source of truth).
-    val written = spark.read.parquet(tmp.toString)
-    val partStats = written.groupBy(spark_partition_id().as("pid"))
-      .agg(count(lit(1)).as("rows"))
-      .orderBy("pid")
-      .collect()
-    val partRows = partStats
-      .map(r => s"""{"pid":${r.getInt(0)},"rows":${r.getLong(1)}}""")
-    // total = sum of the per-partition rows already collected — a second
-    // full count() scan of the snapshot would be redundant I/O per commit
-    val total = partStats.map(_.getLong(1)).sum
-
-    // Swap snapshot into place, then commit via manifest (commit point).
-    // The OLD manifest is invalidated FIRST: a crash anywhere in the swap
-    // window then leaves no manifest (-> recompute on resume) instead of
-    // a manifest whose fingerprint describes data that was already
-    // deleted or replaced — the stated invariant "manifest present +
-    // fingerprint match = committed" must hold through crashes.
-    Files.deleteIfExists(manifestPath(name))
-    val dd = dataDir(name)
-    deleteRecursively(dd)
-    Files.move(tmp, dd, StandardCopyOption.ATOMIC_MOVE)
-    val manifest =
-      s"""{"stage":"${esc(name)}","fingerprint":"$fp","rows":$total,
-         |"partitions":[${partRows.mkString(",")}]}""".stripMargin
-    val tmpManifest = stageDir(name).resolve(".MANIFEST.tmp")
-    Files.write(tmpManifest, manifest.getBytes(StandardCharsets.UTF_8))
-    Files.move(tmpManifest, manifestPath(name), StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
-    spark.read.parquet(dd.toString)
+    // Spark skips `_`/`.` files (markers, checksums) when reading a dir
+    val partRows = fs.listStatus(data)
+      .filterNot(st => st.getPath.getName.startsWith("_") || st.getPath.getName.startsWith("."))
+      .sortBy(_.getPath.getName)
+      .map(st => Using.resource(
+        ParquetFileReader.open(HadoopInputFile.fromStatus(st, fs.getConf)))(_.getRecordCount))
+    val record = JObject(
+      "stage" -> JString(name),
+      "fingerprint" -> JString(fp),
+      "rows" -> JInt(partRows.sum),
+      "partitions" -> JArray(partRows.zipWithIndex.map { case (rows, pid) =>
+        JObject("pid" -> JInt(pid), "rows" -> JInt(rows))
+      }.toList))
+    Using.resource(fs.create(manifestPath(name), true))(
+      _.write(compact(render(record)).getBytes(UTF8.charSet)))
+    spark.read.parquet(data.toString)
   }
+}
 
-  private def deleteRecursively(p: Path): Unit = {
-    if (Files.exists(p)) {
-      Files.walk(p).sorted(java.util.Comparator.reverseOrder())
-        .forEach(f => Files.delete(f))
-    }
-  }
+object StageStore {
+
+  /** The Hadoop FileSystem a store root resolves to — the one lookup both
+    * commit stores (this one and [[graft.streaming.VersionedState]]) use.
+    */
+  def fsOf(spark: SparkSession, root: String): FileSystem =
+    new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
 }

@@ -436,7 +436,6 @@ object ResolvePipeline {
     // string snapshots recompute instead of being misread.
     // Output equality of the two paths is pinned by ResolveJobSpec's
     // checkpointed == direct test and the q04/q05/q29/q60 oracles.
-    val useDids = true
     // Surrogates are minted DENSE (0..n-1) in doc_id order — the name dim
     // is FROZEN range-sorted (see the orderBy at its localCheckpoint);
     // partition sizes of that frozen layout are read with one tiny
@@ -502,14 +501,12 @@ object ResolvePipeline {
     val joinId = "__did"
     // pk packing needs every id < 2^31; the orphan fallback composes on
     // the two-column shape, so it keeps the unpacked path
-    val packed = useDids && nReps < (1L << 31) && !cfg.orphanFallback
+    val packed = nReps < (1L << 31) && !cfg.orphanFallback
     // the key builders and CandidateGenerator are id-type-agnostic: feed
     // them the join id in the doc_id slot
     val keySource =
-      if (useDids)
-        namesKeyed.select(col("__did").as("doc_id") +:
-          names.columns.filter(_ != "doc_id").toSeq.map(col): _*)
-      else names
+      namesKeyed.select(col("__did").as("doc_id") +:
+        names.columns.filter(_ != "doc_id").toSeq.map(col): _*)
 
     // ---- blocking keys (B1 + B5 + B6): one unified (block_key, doc_id)
     // table as a union of per-strategy key tables (each strategy stays a
@@ -707,7 +704,7 @@ object ResolvePipeline {
     // (A shuffle_hash hint on the name sides was measured and reverted:
     // 179 s vs 170 s for the SMJ plan at local[16] — the stage is
     // kernel-dominated, and SMJ's sorts are not the bottleneck.)
-    // Sorted pair scan (surrogate mode): within each partition the pair
+    // Sorted pair scan: within each partition the pair
     // stream is scanned in (doc_id_a, doc_id_b) order, so the broadcast
     // name-relation probes walk a localized window of the dim (ids are
     // locality-dense, see namesKeyed) instead of random-accessing the
@@ -721,8 +718,7 @@ object ResolvePipeline {
         pairs.sortWithinPartitions("pk")
           .select(shiftright(col("pk"), 31).as("doc_id_a"),
             col("pk").bitwiseAND(lit((1L << 31) - 1)).as("doc_id_b"))
-      else if (useDids) pairs.sortWithinPartitions("doc_id_a", "doc_id_b")
-      else pairs
+      else pairs.sortWithinPartitions("doc_id_a", "doc_id_b")
     val scoredPlan = pairsScanned
       .join(a, Seq("doc_id_a"))
       .join(b, Seq("doc_id_b"))

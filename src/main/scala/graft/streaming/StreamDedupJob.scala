@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
+import graft.checkpoint.StageStore
 import graft.dedup.Dedup
 import graft.util.Args
 
@@ -101,7 +102,7 @@ object StreamDedupJob {
     */
   def readStateTable(spark: SparkSession, stateRoot: String,
                      table: String): Option[DataFrame] =
-    VersionedState.readTable(spark, stateRoot, table)
+    VersionedState.readTableFrom(spark, VersionedState.liveUnits(spark, stateRoot), table)
 
   /** The maintained near-dup pair set over everything ingested so far —
     * equals the full-batch recompute (chained-increments property).
@@ -117,7 +118,7 @@ object StreamDedupJob {
   private def algoGuard(spark: SparkSession, stateRoot: String,
                         units: Seq[(Long, String)], algo: String): Unit = {
     units.lastOption.foreach { case (_, dir) =>
-      val hasShingles = VersionedState.fsOf(spark, stateRoot)
+      val hasShingles = StageStore.fsOf(spark, stateRoot)
         .exists(new org.apache.hadoop.fs.Path(s"$dir/shingles"))
       val stateAlgo = if (hasShingles) "minhash" else "simhash"
       if (stateAlgo != algo)
@@ -139,7 +140,7 @@ object StreamDedupJob {
   private def corpusIngestedIds(spark: SparkSession, stateRoot: String,
                                 units: Seq[(Long, String)]): Option[DataFrame] = {
     if (units.isEmpty) return None
-    val fs = VersionedState.fsOf(spark, stateRoot)
+    val fs = StageStore.fsOf(spark, stateRoot)
     val (withIds, legacy) = units.partition { case (_, d) =>
       fs.exists(new org.apache.hadoop.fs.Path(s"$d/ids"))
     }

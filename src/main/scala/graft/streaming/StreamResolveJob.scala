@@ -103,7 +103,7 @@ object StreamResolveJob {
     opts
   }
 
-  import VersionedState.fsOf
+  import graft.checkpoint.StageStore.fsOf
 
   private def stateKeys(names: DataFrame): DataFrame =
     BlockingKeys.explodeKeys(names, "doc_id",

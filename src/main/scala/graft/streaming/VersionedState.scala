@@ -1,7 +1,9 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+
+import graft.checkpoint.StageStore.fsOf
 
 /** Durable state layouts shared by the streaming jobs, both built on
   * one primitive: a unit directory becomes visible by creating its
@@ -13,9 +15,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * at-least-once foreachBatch.
   *
   * Two layouts:
-  *  - `v=<batchId>` FULL SNAPSHOTS (legacy; [[latestVersion]] /
-  *    [[commitVersion]], keep-2 pruning) — every version rewrites the
-  *    whole state. [[StreamResolveJob]] migrates such roots on contact.
+  *  - `v=<batchId>` FULL SNAPSHOTS (legacy, read-only: [[latestVersion]])
+  *    — every version rewrote the whole state. Nothing writes them any
+  *    more; [[StreamResolveJob]] migrates such roots on contact.
   *  - `d=<batchId>` APPEND DELTAS + `base=<upto>` compactions (the
   *    current layout, both jobs): a batch writes only its own rows;
   *    readers see the latest base plus deltas above it
@@ -24,45 +26,15 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 private[streaming] object VersionedState {
 
-  def fsOf(spark: SparkSession, root: String): FileSystem =
-    new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  /** Committed versions, ascending. A version counts only once its
-    * `_COMMITTED` marker exists — partial writes are invisible.
-    */
-  def committedVersions(spark: SparkSession, root: String): Seq[Long] = {
-    val fs = fsOf(spark, root)
-    val rootPath = new Path(root)
-    if (!fs.exists(rootPath)) return Nil
-    fs.listStatus(rootPath).map(_.getPath)
-      .filter(p => p.getName.startsWith("v=") &&
-        fs.exists(new Path(p, "_COMMITTED")))
-      .map(_.getName.drop(2).toLong).sorted.toSeq
-  }
-
+  /** Latest committed legacy `v=` snapshot version, or -1 if none. */
   def latestVersion(spark: SparkSession, root: String): Long =
-    committedVersions(spark, root).lastOption.getOrElse(-1L)
-
-  /** Commit `v` and prune: keep the last two COMMITTED versions (the
-    * previous one stays for readers mid-swap); delete every other v= dir
-    * — older committed snapshots AND uncommitted leftovers from failed
-    * attempts, which must never count toward the keep-2 window.
-    */
-  def commitVersion(spark: SparkSession, root: String, v: Long): Unit = {
-    val fs = fsOf(spark, root)
-    fs.create(new Path(s"$root/v=$v/_COMMITTED"), true).close()
-    val keep = committedVersions(spark, root).takeRight(2)
-      .map(id => s"v=$id").toSet
-    fs.listStatus(new Path(root)).map(_.getPath)
-      .filter(p => p.getName.startsWith("v=") && !keep(p.getName))
-      .foreach(p => fs.delete(p, true))
-  }
+    committedUnits(spark, root, "v=").lastOption.getOrElse(-1L)
 
   // ------------------------------------------------------------------
   // Append-delta layout (root/d=<batchId> + root/base=<uptoId>) — for
   // state that GROWS by batch (the dedup corpus): each micro-batch
   // writes only ITS OWN rows as a delta, so per-trigger write I/O is
-  // O(batch), not O(corpus) (the v= snapshot layout above rewrites the
+  // O(batch), not O(corpus) (the legacy v= snapshot layout rewrote the
   // full state per version — right for state that is globally REVISED
   // each batch, like cluster assignments, wrong for an append-only
   // corpus). Readers see: latest committed base (a compaction of every
@@ -108,7 +80,9 @@ private[streaming] object VersionedState {
   }
 
   /** One state table unioned across the given unit dirs (from
-    * [[StateView.units]]); None when there are none.
+    * [[StateView.units]]); None when there are none. This is the reader
+    * for APPEND-ONLY tables; where later units OVERRIDE earlier rows,
+    * merge by unit id instead (e.g. StreamResolveJob.currentClusters).
     */
   def readTableFrom(spark: SparkSession, units: Seq[(Long, String)],
                     table: String): Option[DataFrame] = {
@@ -140,23 +114,6 @@ private[streaming] object VersionedState {
   def liveUnits(spark: SparkSession, root: String): Seq[(Long, String)] =
     stateView(spark, root).units(root)
 
-  /** Directories of the current committed view, oldest first. */
-  def liveUnitDirs(spark: SparkSession, root: String): Seq[String] =
-    liveUnits(spark, root).map(_._2)
-
-  /** One state table unioned across the committed view (latest base +
-    * deltas above it), or None when nothing is committed yet — the
-    * reader for APPEND-ONLY tables (keys, names, rejects, pairs). For
-    * tables where later units OVERRIDE earlier rows, merge with
-    * [[liveUnits]]' ids (e.g. StreamResolveJob.currentClusters).
-    */
-  def readTable(spark: SparkSession, root: String,
-                table: String): Option[DataFrame] = {
-    val dirs = liveUnitDirs(spark, root).map(d => s"$d/$table")
-    if (dirs.isEmpty) None
-    else Some(spark.read.parquet(dirs: _*))
-  }
-
   /** Commit delta `id` (marker only — deltas are the corpus; nothing is
     * pruned here, compaction GCs them).
     */
@@ -164,8 +121,7 @@ private[streaming] object VersionedState {
     fsOf(spark, root).create(new Path(s"$root/d=$id/_COMMITTED"), true).close()
 
   /** Commit a base covering every delta <= `upto`, then GC with a
-    * one-cycle GRACE WINDOW for concurrent readers (the delta-layout
-    * analog of the snapshot layout's keep-2): the PREVIOUS base and the
+    * one-cycle GRACE WINDOW for concurrent readers: the PREVIOUS base and the
     * deltas between it and `upto` survive this commit — a reader that
     * listed the units just before the marker landed can still finish
     * its scan — and are deleted by the NEXT base commit. What goes now:
@@ -197,6 +153,10 @@ private[streaming] object VersionedState {
       .foreach(p => fs.delete(p, true))
   }
 
+  /** Committed unit ids under `prefix` (`v=`, `base=`), ascending. A
+    * unit counts only once its `_COMMITTED` marker exists — partial
+    * writes are invisible.
+    */
   private def committedUnits(spark: SparkSession, root: String,
                              prefix: String): Seq[Long] = {
     val fs = fsOf(spark, root)
@@ -219,8 +179,7 @@ private[streaming] object VersionedState {
   def lineageGuard(spark: SparkSession, ckpt: String, stateRoot: String): Unit = {
     val ckptOffsets = new Path(s"$ckpt/offsets")
     val ckptFresh = !fsOf(spark, ckpt).exists(ckptOffsets)
-    // covers both layouts: v= snapshots (resolve job) and d=/base=
-    // deltas (dedup job)
+    // covers both layouts: legacy v= snapshots and d=/base= deltas
     val stateEmpty = latestVersion(spark, stateRoot) < 0 &&
       highWater(spark, stateRoot) < 0
     if (ckptFresh && !stateEmpty)

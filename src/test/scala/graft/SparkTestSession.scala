@@ -13,6 +13,7 @@ object SparkTestSession {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.warehouse.dir", wh)
       .config("spark.ui.enabled", "false")
+      .config("spark.hadoop.fs.graftfs.impl", classOf[GraftFileSystem].getName)
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     graft.functions.Er.register(s)

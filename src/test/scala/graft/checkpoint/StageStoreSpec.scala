@@ -20,9 +20,22 @@ class StageStoreSpec extends AnyFunSuite {
   private def tmpDir(prefix: String): String =
     Files.createTempDirectory(prefix).toString
 
-  test("committed stage with same fingerprint is not recomputed") {
+  /** Registers a store-level case twice: on the default `file:` FS under
+    * `name`, and on the test-only `graftfs:` scheme under `name [graftfs]`.
+    * `tmpRoot(prefix)` gives a fresh (store root, local path) pair; the
+    * fault injection edits the local path, the store sees only the root.
+    */
+  private def storeTest(name: String)(
+      body: (String => (String, String)) => Unit): Unit =
+    for ((scheme, suffix) <- Seq("" -> "", "graftfs://" -> " [graftfs]"))
+      test(name + suffix)(body { prefix =>
+        val dir = tmpDir(prefix)
+        (scheme + dir, dir)
+      })
+
+  storeTest("committed stage with same fingerprint is not recomputed") { tmpRoot =>
     import spark.implicits._
-    val store = new StageStore(tmpDir("graft-store"), spark)
+    val store = new StageStore(tmpRoot("graft-store")._1, spark)
     var computes = 0
     def compute = { computes += 1; Seq((1, "a"), (2, "b")).toDF("id", "v") }
     val fp = store.fingerprint("stage-params", "v1")
@@ -32,9 +45,9 @@ class StageStoreSpec extends AnyFunSuite {
     assert(first.map(_.toString).toSeq == second.map(_.toString).toSeq)
   }
 
-  test("fingerprint change invalidates the snapshot") {
+  storeTest("fingerprint change invalidates the snapshot") { tmpRoot =>
     import spark.implicits._
-    val store = new StageStore(tmpDir("graft-store"), spark)
+    val store = new StageStore(tmpRoot("graft-store")._1, spark)
     var computes = 0
     def compute = { computes += 1; Seq(1).toDF("id") }
     store.materialize("s1", store.fingerprint("v1"))(compute)
@@ -42,10 +55,10 @@ class StageStoreSpec extends AnyFunSuite {
     assert(computes == 2)
   }
 
-  test("manifest records rows and per-partition lineage") {
+  storeTest("manifest records rows and per-partition lineage") { tmpRoot =>
     import spark.implicits._
-    val root = tmpDir("graft-store")
-    val store = new StageStore(root, spark)
+    val (uri, root) = tmpRoot("graft-store")
+    val store = new StageStore(uri, spark)
     store.materialize("s1", "fp00")(Seq(1, 2, 3).toDF("id"))
     val manifest = new String(Files.readAllBytes(Paths.get(root, "s1", "MANIFEST.json")))
     assert(manifest.contains("\"rows\":3"))
@@ -59,15 +72,15 @@ class StageStoreSpec extends AnyFunSuite {
   // committed stage is trusted, and the final output is byte-identical
   // to an uninterrupted run.
 
-  test("chaos: kill between snapshot move and manifest commit -> recompute") {
+  storeTest("chaos: kill between snapshot move and manifest commit -> recompute") { tmpRoot =>
     import spark.implicits._
-    val root = tmpDir("graft-chaos")
-    val store = new StageStore(root, spark)
+    val (uri, root) = tmpRoot("graft-chaos")
+    val store = new StageStore(uri, spark)
     var computes = 0
     def compute = { computes += 1; Seq((1, "a"), (2, "b")).toDF("id", "v") }
     val fp = store.fingerprint("v1")
     val clean = store.materialize("s1", fp)(compute).collect().map(_.toString).sorted
-    // simulate the crash window: data dir swapped into place, manifest
+    // simulate the crash window: snapshot written in place, manifest
     // (the commit point) never written
     Files.delete(Paths.get(root, "s1", "MANIFEST.json"))
     val after = store.materialize("s1", fp)(compute).collect().map(_.toString).sorted
@@ -76,12 +89,13 @@ class StageStoreSpec extends AnyFunSuite {
     assert(store.committedFingerprint("s1").contains(fp), "recommit must complete")
   }
 
-  test("chaos: stale tmp dir from a killed writer is cleaned and overwritten") {
+  storeTest("chaos: stale tmp dir from a killed writer is cleaned and overwritten") { tmpRoot =>
     import spark.implicits._
-    val root = tmpDir("graft-chaos")
-    val store = new StageStore(root, spark)
+    val (uri, root) = tmpRoot("graft-chaos")
+    val store = new StageStore(uri, spark)
     val fp = store.fingerprint("v1")
-    // a previous run died mid-write leaving a garbage .tmp-<fp> dir
+    // a run of the earlier tmp-dir-and-rename protocol died mid-write,
+    // leaving a garbage .tmp-<fp> dir
     val tmp = Paths.get(root, "s1", s".tmp-$fp")
     Files.createDirectories(tmp)
     Files.write(tmp.resolve("part-00000.parquet"), Array[Byte](1, 2, 3))
@@ -99,10 +113,10 @@ class StageStoreSpec extends AnyFunSuite {
     assert(!Files.exists(tmp))
   }
 
-  test("chaos: compute failure leaves store uncommitted; retry succeeds") {
+  storeTest("chaos: compute failure leaves store uncommitted; retry succeeds") { tmpRoot =>
     import spark.implicits._
-    val root = tmpDir("graft-chaos")
-    val store = new StageStore(root, spark)
+    val (uri, root) = tmpRoot("graft-chaos")
+    val store = new StageStore(uri, spark)
     val fp = store.fingerprint("v1")
     // first attempt dies mid-stage (the analog of a fatal task failure)
     intercept[RuntimeException] {
@@ -117,10 +131,10 @@ class StageStoreSpec extends AnyFunSuite {
     assert(out == Seq("[1,a]"))
   }
 
-  test("chaos: truncated manifest is treated as uncommitted") {
+  storeTest("chaos: truncated manifest is treated as uncommitted") { tmpRoot =>
     import spark.implicits._
-    val root = tmpDir("graft-chaos")
-    val store = new StageStore(root, spark)
+    val (uri, root) = tmpRoot("graft-chaos")
+    val store = new StageStore(uri, spark)
     var computes = 0
     def compute = { computes += 1; Seq(1).toDF("id") }
     val fp = store.fingerprint("v1")
@@ -132,6 +146,45 @@ class StageStoreSpec extends AnyFunSuite {
     store.materialize("s1", fp)(compute)
     assert(computes == 2, "corrupt manifest must force a recompute")
     assert(store.committedFingerprint("s1").contains(fp))
+  }
+
+  test("manifest: rows is the top-level total wherever partitions sit; the previous format resumes") {
+    import spark.implicits._
+    val root = tmpDir("graft-manifest")
+    def manifest(stage: String, text: String): Unit = {
+      Files.createDirectories(Paths.get(root, stage))
+      Files.write(Paths.get(root, stage, "MANIFEST.json"), text.getBytes)
+    }
+    val store = new StageStore(root, spark)
+    manifest("reordered",
+      """{"stage":"reordered","fingerprint":"fp00",""" +
+        """"partitions":[{"pid":0,"rows":2},{"pid":1,"rows":1}],"rows":3}""")
+    assert(store.committedRows("reordered").contains(3L))
+
+    // a stage committed by the previous writer, byte for byte: the
+    // snapshot is resumed, not recomputed
+    Seq((1, "a"), (2, "b")).toDF("id", "v")
+      .write.parquet(Paths.get(root, "legacy", "data").toString)
+    manifest("legacy",
+      """{"stage":"legacy","fingerprint":"fp01","rows":2,
+        |"partitions":[{"pid":0,"rows":2}]}""".stripMargin)
+    var computes = 0
+    val out = store.materialize("legacy", "fp01") {
+      computes += 1; Seq((9, "z")).toDF("id", "v")
+    }
+    assert(computes == 0, "a committed stage in the previous format must resume")
+    assert(out.collect().map(_.toString).sorted.toSeq == Seq("[1,a]", "[2,b]"))
+    assert(store.committedRows("legacy").contains(2L))
+  }
+
+  test("pipeline checkpointed on a non-default FileSystem scheme equals the file: run") {
+    val docs = DocGen.corpusDF(spark, entities = 10, docsPerEntity = 3)
+      .select("doc_id", "spans")
+    def clusters(root: String) =
+      ResolvePipeline.run(spark, docs, PipelineConfig(checkpointRoot = Some(root)))
+        .clusters.select("doc_id", "cluster_id").collect().map(_.toString).sorted.toSeq
+    assert(clusters("graftfs://" + tmpDir("graft-scheme")) ==
+      clusters(tmpDir("graft-scheme-file")))
   }
 
   test("chaos: mid-pipeline manifest loss -> stage recomputed, output byte-identical") {

@@ -6,6 +6,7 @@ import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkTestSession
+import graft.checkpoint.StageStore
 import graft.dedup.Dedup
 
 /** The streaming dedup entry: durable append-delta near-dup state,
@@ -200,7 +201,7 @@ class StreamDedupJobSpec extends AnyFunSuite {
     StreamDedupJob.attachBatch(spark, state, mkDocs(0 until 10), batchId = 0L,
       threshold = 0.4, compactEvery = 0)
     // simulate a unit written by the pre-ledger engine
-    VersionedState.fsOf(spark, state)
+    StageStore.fsOf(spark, state)
       .delete(new org.apache.hadoop.fs.Path(s"$state/d=0/ids"), true)
     // keyed ids are still guarded via the keys fallback
     val e = intercept[IllegalStateException] {
@@ -232,7 +233,7 @@ class StreamDedupJobSpec extends AnyFunSuite {
     // Structured Streaming commit record both gone (the kill landed
     // inside foreachBatch, before either was finalized)
     val last = deltas.last
-    val fs = VersionedState.fsOf(spark, state)
+    val fs = StageStore.fsOf(spark, state)
     fs.delete(new org.apache.hadoop.fs.Path(s"$state/d=$last/_COMMITTED"), false)
     fs.delete(new org.apache.hadoop.fs.Path(s"$ckpt/commits/$last"), false)
     assert(statePairs(state).size < clean.size,

@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkTestSession
+import graft.checkpoint.StageStore
 import graft.functions.Er
 import graft.gen.DocGen
 import graft.norm.Normalizer
@@ -198,7 +199,7 @@ class StreamResolveJobSpec extends AnyFunSuite {
     IncrementalResolve.resolveNames(spark, empty, names.limit(0), names)
       .write.parquet(s"$state/v=0/clusters")
     names.write.parquet(s"$state/v=0/names")
-    VersionedState.fsOf(spark, state)
+    StageStore.fsOf(spark, state)
       .create(new org.apache.hadoop.fs.Path(s"$state/v=0/_COMMITTED"), true).close()
     val legacyCount = spark.read.parquet(s"$state/v=0/clusters").count()
 
@@ -352,7 +353,7 @@ class StreamResolveJobSpec extends AnyFunSuite {
     val clean = stateClusters(state)
     // rewind to the kill point: last batch's marker and its SS commit gone
     val last = deltas.last
-    val fs = VersionedState.fsOf(spark, state)
+    val fs = StageStore.fsOf(spark, state)
     fs.delete(new org.apache.hadoop.fs.Path(s"$state/d=$last/_COMMITTED"), false)
     fs.delete(new org.apache.hadoop.fs.Path(s"$ckpt/commits/$last"), false)
     assert(stateClusters(state).length < clean.length,
