@@ -48,10 +48,10 @@ final case class PipelineConfig(
       * but a window cannot partial-aggregate: every row of one
       * normalized-name group lands in ONE task, so a corpus with a
       * dominant exact-duplicate name (the Zipfian case at crawl scale)
-      * gets an unbounded single-task straggler (measured:
-      * PregroupSkewProbe, 6M-copy hot name -> the whole stage is one
-      * 8.3 s task; the two-phase shape finishes 2.4x faster with its
-      * hot join AQE-skew-splittable). Set true for such corpora: reps
+      * gets an unbounded single-task straggler (measured, see
+      * OPTIMIZATION_r06.md §9f: with a 6M-copy hot name the whole stage
+      * is one 8.3 s task; the two-phase shape finishes 2.4x faster with
+      * its hot join AQE-skew-splittable). Set true for such corpora: reps
       * come from a partial-aggregating groupBy (always skew-safe) and
       * the member->rep map from a join back (AQE splits hot keys /
       * broadcasts small rep dims). Output is identical — both compute
@@ -143,26 +143,6 @@ final case class PipelineResult(
     candidateStats: () => CandidateGenerator.CandidateStats)
 
 object ResolvePipeline {
-
-  /** Fine-grained scaling attribution (dev-only): additionally times the
-    * scoring stage's sub-steps — candidate distinct, kernels-only pass,
-    * cache-build — and each blocking strategy's key table separately, by
-    * materializing them one at a time before the production pass. The
-    * extra actions distort the STAGE totals (sub-steps run once each on
-    * their own), so this is never on in a recorded run; each sub-number
-    * is individually clean.
-    */
-  private val fine = sys.env.contains("GRAFT_PROFILE_FINE")
-  private val profile = sys.env.contains("GRAFT_PROFILE") || fine
-  private def timed[T](name: String)(f: => T): T = {
-    if (!profile) f
-    else {
-      val t0 = System.nanoTime()
-      val r = f
-      System.err.println(f"[pipeline] $name: ${(System.nanoTime() - t0) / 1e9}%.2f s")
-      r
-    }
-  }
 
   /** Run over a docs table (doc_id string, spans array<struct<...>>).
     *
@@ -311,12 +291,11 @@ object ResolvePipeline {
     // by key generation plus both sides of the scoring join
     val allNames = store match {
       case Some(_) => normalized.select(nameCols: _*)
-      case None if !cfg.exactPregroup => timed("allNames.localCheckpoint") {
+      case None if !cfg.exactPregroup =>
         // when pregrouping is OFF this dim is where surrogates get minted
         // (see namesKeyed): freeze it in doc_id order so the minted ids
         // are order-isomorphic to the string ids
         normalized.select(nameCols: _*).orderBy("doc_id").localCheckpoint(true)
-      }
       // pregroup + non-checkpoint mode: left LAZY on purpose — the fused
       // rep-window pass below is this projection's only hot consumer and
       // its columnar persist is the materialization barrier; a separate
@@ -365,7 +344,7 @@ object ResolvePipeline {
               .withColumn("rep", min("doc_id").over(byGroup))
               .select(col("doc_id"), col("rep"))
           (reps, Some(m))
-        case None if cfg.exactPregroupSkewSafe => timed("repGroups.materialize") {
+        case None if cfg.exactPregroupSkewSafe =>
           // two-phase shape (see exactPregroupSkewSafe scaladoc): reps
           // from a PARTIAL-AGGREGATING groupBy — a dominant group
           // contributes one partial row per map task, never one task's
@@ -381,10 +360,14 @@ object ResolvePipeline {
               typeCol.map(_ => col("__type")) ++
               tenantCol.map(_ => col("__tenant"))): _*)
             .orderBy("doc_id").localCheckpoint(true)
+          // build the map's cache while `an` is still cached, then release
+          // `an`: a loaded cache keeps its buffers when a plan it was built
+          // from is uncached
           val m = joinRepMap(an, repsMat).persist()
+          m.count()
+          an.unpersist()
           (repsMat, Some(m))
-        }
-        case None => timed("repGroups.materialize") {
+        case None =>
           // FUSED pass: one window exchange yields BOTH pregroup surfaces —
           // the rep dim (rows whose doc_id IS the group min: exactly one
           // per group, identical to groupBy+min) and the member->rep map.
@@ -405,7 +388,6 @@ object ResolvePipeline {
           val repsMat = withRep.where(col("doc_id") === col("rep")).drop("rep")
             .orderBy("doc_id").localCheckpoint(true)
           (repsMat, Some(withRep.select(col("doc_id"), col("rep"))))
-        }
       } else (allNames, None)
 
     // ---- integer surrogate join ids (BOTH modes since r06). The
@@ -556,10 +538,7 @@ object ResolvePipeline {
     val keys = store match {
       case Some(_) => stage("blocking_keys", fpKeys)(
         keyTables.reduce(_ union _).coalesce(keyParts))
-      case None => timed("keys.materialize") {
-        if (fine) keyTables.zipWithIndex.foreach { case (kt, i) =>
-          timed(s"fine.keys.strategy$i.count")(kt.count())
-        }
+      case None =>
         // columnar cache, not RDD localCheckpoint: the cache stores
         // ~10k-row compressed column batches (dictionary/RLE on the key
         // strings) instead of one heap object per row. Measured on the
@@ -574,7 +553,6 @@ object ResolvePipeline {
         val k = keyTables.reduce(_ union _).coalesce(keyParts).persist()
         keysRows = k.count()
         k
-      }
     }
     // Measured-size broadcast decision for the candidate self-join (guide
     // §3.1): the key table was just counted, so the driver KNOWS whether
@@ -587,8 +565,8 @@ object ResolvePipeline {
       keysRows >= 0 && keysRows <= CandidateGenerator.BroadcastKeysMaxRows
 
     // ---- candidate pairs (B3) with block-size cap + AQE skew handling
-    val candStats = () => timed("stats")(
-      CandidateGenerator.stats(keys, cfg.maxBlockSize, cfg.saltedMaxBlockSize))
+    val candStats = () =>
+      CandidateGenerator.stats(keys, cfg.maxBlockSize, cfg.saltedMaxBlockSize)
     // the packed flag is part of the pair snapshot's identity: packed
     // snapshots hold one pk long, unpacked two id columns — a resume
     // whose packedness changed (corpus crossed 2^31 reps, or the orphan
@@ -614,15 +592,10 @@ object ResolvePipeline {
     // memory cost is minimal at any scale and eviction just recomputes.
     val blockedPairs = store match {
       case Some(_) => blockedPairsPlan
-      case None => timed("pairs.materialize") {
+      case None =>
         val p = blockedPairsPlan.persist()
         p.count()
-        if (sys.env.contains("GRAFT_EXPLAIN"))
-          System.err.println("[explain] pairs plan (executed):\n" +
-            p.queryExecution.executedPlan.toString.linesIterator
-              .take(80).mkString("\n"))
         p
-      }
     }
 
     // ---- B4, bounded (api/EntityResolutionService.java:512-524): the
@@ -749,48 +722,15 @@ object ResolvePipeline {
     // eager localCheckpoint is.
     val pairScores = store match {
       case Some(_) => stage("pair_scores", fpScores)(scoredPlan)
-      case None => timed("pairScores.materialize") {
-        if (fine) {
-          // raw (pre-distinct) pair volume: sum n*(n-1)/2 over kept
-          // blocks. Salted-range blocks (maxBlockSize < n <= salted cap)
-          // also generate pairs but are excluded here — the label says
-          // so to keep the printed diagnostic truthful in salted configs
-          // (ADVICE r05).
-          val kept = keys.groupBy("block_key").agg(count(lit(1)).as("n"))
-            .where(col("n") <= cfg.maxBlockSize)
-            .agg(sum(col("n") * (col("n") - 1) / 2)).collect()(0)
-          System.err.println(
-            s"[pipeline] fine.rawPairsUpperBound (unsalted blocks only): ${kept.get(0)}")
-          // D: candidate distinct + columnar cache of the 16-byte pairs
-          timed("fine.pairs.distinct+cache") { pairs.persist(); pairs.count() }
-          // J0: join skeleton only — count(1) prunes every kernel column,
-          // so this times the sorted scan + the two dim probes alone
-          timed("fine.score.joinSkeleton") {
-            scoredPlan.select("doc_id_a", "doc_id_b")
-              .agg(count(lit(1))).collect()
-          }
-          // J: the same plan with the kernels forced (sum(score) keeps
-          // lev/jw/jaccard alive through pruning), still no row store
-          timed("fine.score.withKernels") {
-            scoredPlan.agg(sum(col("score")), count(lit(1))).collect()
-          }
-        }
+      case None =>
         // columnar cache for the pipeline's WIDEST materialization (see
         // keys above for the measured localCheckpoint anti-scaling).
         // pairScores compresses exceptionally well columnar: `decision`
         // is 3-valued RLE, ids dictionary-encode, and the count() the
         // callers do reads batch row counts without touching data.
         val p = scoredPlan.persist()
-        timed("fine.persist.build")(p.count())
-        // dev-only: the EXECUTED scoring plan, printed after the build so
-        // AQE's final stage choices (join strategies, cache hits) are
-        // visible rather than the pre-execution guess
-        if (sys.env.contains("GRAFT_EXPLAIN"))
-          System.err.println("[explain] scoring plan (executed):\n" +
-            p.queryExecution.executedPlan.toString.linesIterator
-              .take(150).mkString("\n"))
+        p.count()
         p
-      }
     }
 
     // ---- edges (M7/M9 + D7 overrides) -> connected components -> clusters
@@ -844,10 +784,8 @@ object ResolvePipeline {
       case None => autoEdges
     }
     val vertices = names.select("doc_id")
-    val repAssignments = timed("cc") {
-      stage("clusters", fpClusters) {
-        ConnectedComponents.run(spark, edges, vertices)
-      }
+    val repAssignments = stage("clusters", fpClusters) {
+      ConnectedComponents.run(spark, edges, vertices)
     }
 
     // expand representative clusters back to every member; non-ACTIVE

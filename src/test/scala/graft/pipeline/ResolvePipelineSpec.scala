@@ -182,6 +182,25 @@ class ResolvePipelineSpec extends AnyFunSuite {
       "skew-safe rep map must match under tenant scoping with NULL tenants")
   }
 
+  test("skew-safe pregroup leaves no more cached frames than the window pregroup") {
+    import org.apache.spark.sql.graftbridge.CachedFrames
+    // a corpus no other test runs: a plan that an earlier run already
+    // cached is not cached again, which would skew the counts
+    val docs = DocGen.corpusDF(spark, entities = 30, docsPerEntity = 4, seed = 11L)
+      .select("doc_id", "spans")
+    // cache entries a run adds, with its clusters consumed (the lazy
+    // member->rep expansion reads the cached map)
+    def cachedBy(cfg: PipelineConfig): Int = {
+      val before = CachedFrames.count(spark)
+      ResolvePipeline.run(spark, docs, cfg).clusters.collect()
+      CachedFrames.count(spark) - before
+    }
+    val window = cachedBy(PipelineConfig())
+    val twoPhase = cachedBy(PipelineConfig(exactPregroupSkewSafe = true))
+    assert(twoPhase <= window,
+      s"skew-safe run left $twoPhase cached frames, the window run $window")
+  }
+
   test("D7: review-override edges force a merge the scorer would not") {
     import spark.implicits._
     val docs = Seq(
